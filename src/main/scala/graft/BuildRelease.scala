@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.ReleaseShape
 
 /** Offline build of a release-scale proof index (the reference's train step,
@@ -18,14 +16,7 @@ import graft.engine.ReleaseShape
   */
 object BuildRelease {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.LocalSession(defaultCpus = 32)
     val t0 = System.nanoTime()
     if (args.headOption.contains("wide")) {
       ReleaseShape.stageWide(spark)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.engine.{LopqIndexStore, ReleaseShape}
@@ -25,18 +24,11 @@ object MaintainRelease {
     }
     val nBatches = args.drop(1).headOption.map(_.toInt).getOrElse(50)
     val batchRows = args.drop(2).headOption.map(_.toInt).getOrElse(2048)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // recentProgress retains only this many entries (default ~100); at
-      // hundreds of batches the first-half/second-half flatness comparison
-      // would silently cover just the tail (ADVICE r7)
-      .config("spark.sql.streaming.numRecentProgressUpdates", (nBatches + 16).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // recentProgress retains only this many entries (default ~100); at
+    // hundreds of batches the first-half/second-half flatness comparison
+    // would silently cover just the tail (ADVICE r7)
+    val spark = graft.core.LocalSession(defaultCpus = 32,
+      "spark.sql.streaming.numRecentProgressUpdates" -> (nBatches + 16).toString)
     import spark.implicits._
 
     require(LopqIndexStore.fingerprintOk(shape.dir, shape.p, shape.n, shape.pcaDims),

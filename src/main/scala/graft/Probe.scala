@@ -1,16 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: run one catalog query at a given SF dir, print timing and
-  * (optionally) the formatted physical plan.
-  * Usage: runMain graft.Probe <sfDir> <queryName> [explain|noop|execplan]
+/** Dev tool: run catalog queries at one or more SF dirs, print the
+  * plan-build vs execute split and (optionally) the physical plan.
+  * Usage: runMain graft.Probe <sfDir[,sfDir..]> <query[,query..]>
+  *          [explain|noop|execplan] [conf:key=value ...]
+  *   - `conf:key=value` (repeatable): set a session conf before running,
+  *     e.g. to A/B a `spark.graft.*` gate forced on vs off.
   *   - `noop`: materialize via a noop write (all columns computed — what
   *     Bench times) instead of count() (which lets Catalyst prune).
   *   - `execplan` (r19): materialize, then print the EXECUTED plan —
   *     the only dump that shows final WholeStageCodegen `*(n)` spans
   *     (formatted explain under AQE prints `isFinalPlan=false` without
   *     codegen ids), the witness VERDICT r18 #4 asks for.
+  * Per-layer numbers for the engine's release-family entry points (jobs,
+  * stages, executor/GC time, shuffle/broadcast/collect bytes) come from
+  * `python3 perfbench/run.py --workload bulk|ingest --seed N --trace 1`;
+  * PROBES.md keeps the records of the retired per-experiment probes.
   */
 object Probe {
   def main(args0: Array[String]): Unit = {
@@ -20,15 +25,7 @@ object Probe {
     val doExplain = args.length > 2 && args(2) == "explain"
     val doNoop = args.length > 2 && args(2) == "noop"
     val doExecPlan = args.length > 2 && args(2) == "execplan"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.LocalSession(defaultCpus = 32)
     confArgs.foreach { a =>
       a.stripPrefix("conf:").split("=", 2) match {
         case Array(k, v) => spark.conf.set(k, v); println(s"[probe] conf $k=$v")

@@ -199,19 +199,17 @@ object LopqSearcher {
     * reads them map-side — no encode, no exchange, no join; results are
     * bit-identical (same doubles summed in the same order, spec-pinned,
     * and every row surviving the cell filter has its cell in the map, so
-    * the inner join dropped nothing this form keeps). */
-  /** Flatten per-cell ADC tables (mi-major, M·S doubles per cell) onto a
-    * broadcast variable — shared by the serve path and
-    * `ProbeServeBreakdown` so the probe measures exactly the shipped
-    * layout. Lifecycle parity with the broadcast JOIN this replaced: the
-    * old per-query LocalRelation also materialized as a per-query
-    * TorrentBroadcast (the `BroadcastExchange`), released by the
-    * ContextCleaner once the plan became unreachable — same here, so a
-    * long-running serve process accretes no more broadcast state than it
-    * did before r19. */
-  private[graft] def broadcastFlatTables(spark: org.apache.spark.sql.SparkSession,
-      tables: Seq[(Int, Array[Array[Double]])])
-      : (org.apache.spark.broadcast.Broadcast[java.util.HashMap[Integer, Array[Double]]], Int) = {
+    * the inner join dropped nothing this form keeps). Lifecycle parity
+    * with the broadcast JOIN this replaced: the old per-query
+    * LocalRelation also materialized as a per-query TorrentBroadcast (the
+    * `BroadcastExchange`), released by the ContextCleaner once the plan
+    * became unreachable — same here, so a long-running serve process
+    * accretes no more broadcast state than it did before r19. */
+  private def approxOverCells(codes: DataFrame, cells: Seq[Int],
+      tables: Seq[(Int, Array[Array[Double]])], k: Int, cellBuckets: Int): DataFrame = {
+    val spark = codes.sparkSession
+    ensureInPushdown(spark, cells.size)
+    // per-cell tables flattened mi-major (M·S doubles per cell)
     val m = tables.head._2.length
     val flat = new java.util.HashMap[Integer, Array[Double]](tables.size * 2)
     tables.foreach { case (cell, t) =>
@@ -221,14 +219,7 @@ object LopqSearcher {
       while (mi < m) { System.arraycopy(t(mi), 0, f, mi * s, s); mi += 1 }
       flat.put(cell, f)
     }
-    (spark.sparkContext.broadcast(flat), m)
-  }
-
-  private def approxOverCells(codes: DataFrame, cells: Seq[Int],
-      tables: Seq[(Int, Array[Array[Double]])], k: Int, cellBuckets: Int): DataFrame = {
-    val spark = codes.sparkSession
-    ensureInPushdown(spark, cells.size)
-    val (bc, m) = broadcastFlatTables(spark, tables)
+    val bc = spark.sparkContext.broadcast(flat)
     import org.apache.spark.sql.graft.GraftBridge
     codes
       .where(LopqIndexStore.cellFilter(cells, cellBuckets)) // → partition pruning on disk
@@ -285,14 +276,13 @@ object LopqSearcher {
     rerankExact(approx, vectors, idCol, vecCol, query, k, rerankShape)
   }
 
-  /** Conf: past this many distinct visited cells the batch join skips the
+  /** Past this many distinct visited cells the batch join skips the
     * pushed IN-list (a plan with millions of literals is itself the
     * bottleneck, and at that point the batch visits most of the index
     * anyway — a full codes scan is the right plan). */
-  val AnnJoinMaxPushedCellsConf = "spark.graft.annjoin.maxPushedCells"
-  val DefaultAnnJoinMaxPushedCells = 65536
+  private val AnnJoinMaxPushedCells = 65536
 
-  /** Conf: the batch join's codes-scan cell IN-list is applied only when
+  /** The batch join's codes-scan cell IN-list is applied only when
     * it would DROP at least (1 − this) of the indexed rows — i.e. it is
     * skipped when the batch's visited-cell union keeps more than this
     * fraction. Both sides are exact driver-known quantities (histogram
@@ -301,8 +291,7 @@ object LopqSearcher {
     * is result-identical (the fan-out join's cell_id equi-key discards
     * non-visited cells). 0.75 keeps the filter where it still halves the
     * balanced shuffle (the v4 deployment shape keeps 56 %). */
-  val AnnJoinScanFilterMaxKeepFractionConf = "spark.graft.annjoin.scanFilterMaxKeepFraction"
-  val DefaultAnnJoinScanFilterMaxKeepFraction = 0.75
+  private val AnnJoinScanFilterMaxKeepFraction = 0.75
 
   /** Conf: estimated bytes of materialized per-(query, visited cell) ADC
     * tables above which [[annJoin]] ships the cell-local query PROJECTION
@@ -348,19 +337,15 @@ object LopqSearcher {
     * (`spark.graft.annjoin.last.*`). Every gate in the batch join is sized
     * on quantities the engine knows exactly (pair counts, fan-out rows,
     * payload bytes — never Catalyst plan-stats); these notes surface WHICH
-    * regime each gate picked so probes and specs can PIN the regime a
-    * given shape runs in rather than inferring it from timings — at the
-    * corpus-self-dedup magnitude the interesting claim is precisely "this
-    * ran through the SMJ fallback", and a claim like that needs a
-    * recorded witness, not an estimate. */
+    * regime each gate picked so specs can PIN the regime a given shape
+    * runs in rather than inferring it from timings. */
   val AnnJoinLastPrefix = "spark.graft.annjoin.last."
   private def note(spark: org.apache.spark.sql.SparkSession, key: String, v: Any): Unit =
     spark.conf.set(AnnJoinLastPrefix + key, v.toString)
-  /** The last plan's regime notes, for probes/specs. */
+  /** The last plan's regime notes, for specs. */
   def lastPlanNotes(spark: org.apache.spark.sql.SparkSession): Map[String, String] =
-    Seq("shipMode", "cellsPushed", "scanKeepFraction", "balanced",
-        "qsideBroadcast", "rerankMode",
-        "exactShape", "nPairs", "fanOutRows", "qsidePayloadBytes", "candBound",
+    Seq("shipMode", "balanced", "qsideBroadcast", "rerankMode",
+        "exactShape", "nPairs", "fanOutRows",
         "qvecMaxBytes", "chunks", "chunkRows", "dictBytes")
       .flatMap(k => spark.conf.getOption(AnnJoinLastPrefix + k).map(k -> _))
       .toMap
@@ -556,8 +541,6 @@ object LopqSearcher {
     // (the batch working set does not fit the per-query 64 MB slice LRU)
     val rotB = index.sliceBroadcastFor(clusterKeys)
 
-    val maxPushed = spark.conf
-      .get(AnnJoinMaxPushedCellsConf, DefaultAnnJoinMaxPushedCells.toString).toInt
     // Selectivity gate (r18, guide §1/§2 "don't pay for work that buys
     // nothing"): the cell IN-list is a per-row set probe over EVERY codes
     // row, and its cost grows with the literal count (measured at the v3
@@ -582,13 +565,9 @@ object LopqSearcher {
     }
     val totalRows = index.cellCounts.total
     val keepFraction = if (totalRows > 0) rowsInUnion.toDouble / totalRows else 1.0
-    val maxKeep = spark.conf
-      .get(AnnJoinScanFilterMaxKeepFractionConf,
-        DefaultAnnJoinScanFilterMaxKeepFraction.toString).toDouble
-    val applyCellFilter = unionCells.length <= maxPushed && keepFraction <= maxKeep
-    if (applyCellFilter) ensureInPushdown(spark, math.min(unionCells.length, maxPushed))
-    note(spark, "cellsPushed", applyCellFilter)
-    note(spark, "scanKeepFraction", math.round(keepFraction * 1000.0) / 1000.0)
+    val applyCellFilter = unionCells.length <= AnnJoinMaxPushedCells &&
+      keepFraction <= AnnJoinScanFilterMaxKeepFraction
+    if (applyCellFilter) ensureInPushdown(spark, unionCells.length)
     val pruned =
       if (applyCellFilter)
         index.codes.where(LopqIndexStore.cellFilter(
@@ -776,7 +755,6 @@ object LopqSearcher {
     val qsidePayloadBytes = nPairs * (pairBytes + 24L)
     val broadcastQMax = spark.conf
       .get(AnnJoinBroadcastQueriesMaxBytesConf, DefaultAnnJoinBroadcastQueriesMaxBytes.toString).toLong
-    note(spark, "qsidePayloadBytes", qsidePayloadBytes)
     note(spark, "qsideBroadcast", qsidePayloadBytes <= broadcastQMax)
     val qsideHinted =
       if (qsidePayloadBytes <= broadcastQMax)
@@ -822,17 +800,12 @@ object LopqSearcher {
           s"hold $d distinct ids")
       n * rerankK
     }
-    def noteRerank(mode: String): Unit = {
-      note(spark, "rerankMode", mode)
-      note(spark, "candBound",
-        if (RerankShape.useLookup(vectors, RerankShape.Auto)) candBound else -1L)
-    }
     val rerankJoined =
       if (!RerankShape.useLookup(vectors, RerankShape.Auto)) {
-        noteRerank("scan")
+        note(spark, "rerankMode", "scan")
         cand.join(vecSide, "id") // table streams comfortably — Catalyst picks
       } else if (candBound <= maxLookupIds) {
-        noteRerank("lookup")
+        note(spark, "rerankMode", "lookup")
         val candP = cand.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val ids = candP.select("id").distinct().collect().map(_.get(0))
         ensureInPushdown(spark, ids.length)
@@ -844,10 +817,10 @@ object LopqSearcher {
       } else if (candBound <= maxBcastCand) {
         // middle regime: candidates broadcast, the big table STREAMS through
         // the join — one scan, no shuffle of the table
-        noteRerank("broadcastCand")
+        note(spark, "rerankMode", "broadcastCand")
         vecSide.join(broadcast(cand), "id")
       } else {
-        noteRerank("shuffle")
+        note(spark, "rerankMode", "shuffle")
         cand.join(vecSide, "id") // genuinely huge batch: shuffle join
       }
     // ---- exact stage: attach the probe vector to each candidate pair ----

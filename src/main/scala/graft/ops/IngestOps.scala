@@ -236,7 +236,6 @@ object IngestOps {
     if (deltas.size >= at) {
       val fs = new org.apache.hadoop.fs.Path(vectorsDir(dir))
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      SideStoreFold.resetFoldNote(spark)
       SideStoreFold.minorFold(spark, fs, vectorsDir(dir), deltas, "id")
       SideStoreFold.majorFoldIfDue(spark, fs, vectorsDir(dir), "id")
     }

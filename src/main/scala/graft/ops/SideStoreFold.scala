@@ -48,12 +48,7 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
   *   - the MAJOR level keeps the r15 `_base_next` schedule unchanged
   *     (complete preferred + promoted; partial invisible + discarded —
   *     promoting a partial would replace the base with a subset and lose
-  *     folded rows for good, the IngestSpec rule);
-  *   - LEGACY single-tier artifacts (`_tier`/`_tier_next` from a pre-r17
-  *     store) stay readable in place and are ADOPTED as the ladder's
-  *     oldest run by the next fold's heal, with the old preference rule
-  *     (a complete `_tier_next` supersedes `_tier`; a partial one is
-  *     discarded).
+  *     folded rows for good, the IngestSpec rule).
   */
 private[graft] object SideStoreFold {
 
@@ -72,31 +67,8 @@ private[graft] object SideStoreFold {
   val RunMergeRatioConf = "spark.graft.store.runMergeRatio"
   val DefaultRunMergeRatio = 0.75
 
-  /** Post-fold note (the screen's `last.bandJoin` discipline): every fold
-    * op appends one line — `<side> <op> <secs>s <detail>` — so probes and
-    * specs read what the valve actually did (which level, what it cost)
-    * instead of re-deriving it from directory listings. Callers
-    * ([[TextSigStore.maybeCompact]], [[IngestOps.maybeCompactVectors]])
-    * reset it per valve firing. */
-  val FoldNoteConf = "spark.graft.store.last.folds"
-  def resetFoldNote(spark: SparkSession): Unit =
-    spark.conf.set(FoldNoteConf, "")
-  private def note(spark: SparkSession, root: String, line: String): Unit = {
-    val prev = spark.conf.get(FoldNoteConf, "")
-    val side = new Path(root).getName
-    spark.conf.set(FoldNoteConf,
-      (if (prev.isEmpty) "" else prev + "; ") + s"$side $line")
-  }
-  private def timed[A](body: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
   private def basePath(root: String) = new Path(s"$root/_base")
   private def baseNextPath(root: String) = new Path(s"$root/_base_next")
-  private def legacyTierPath(root: String) = new Path(s"$root/_tier")
-  private def legacyTierNextPath(root: String) = new Path(s"$root/_tier_next")
   private def runsRoot(root: String) = new Path(s"$root/_runs")
   private def runPath(root: String, seq: Int) =
     new Path(runsRoot(root), f"r$seq%05d")
@@ -155,25 +127,16 @@ private[graft] object SideStoreFold {
 
   /** The base level's readable root: a COMPLETE not-yet-promoted
     * `_base_next` (a superset of `_base` by construction) beats the base
-    * itself. Also used for the LEGACY `_tier` pair on the read path. */
-  private def levelToRead(fs: FileSystem, lvl: Path, next: Path)
-      : Seq[String] =
-    if (complete(fs, next)) Seq(next.toString)
-    else if (fs.exists(lvl)) Seq(lvl.toString)
+    * itself. */
+  private def baseToRead(fs: FileSystem, root: String): Seq[String] =
+    if (complete(fs, baseNextPath(root))) Seq(baseNextPath(root).toString)
+    else if (fs.exists(basePath(root))) Seq(basePath(root).toString)
     else Seq.empty
 
   /** Every compacted root a reader unions with the un-folded deltas:
-    * base level, the run ladder, and any legacy single-tier artifact a
-    * pre-r17 store still carries. */
+    * base level and the run ladder. */
   def storedRoots(fs: FileSystem, root: String): Seq[String] =
-    levelToRead(fs, basePath(root), baseNextPath(root)) ++
-      runsToRead(fs, root).map(_.toString) ++
-      levelToRead(fs, legacyTierPath(root), legacyTierNextPath(root))
-
-  /** The ladder's current complete plain runs as `(name, bytes)`,
-    * oldest-first — the probe-facing layout view. */
-  def runLayout(fs: FileSystem, root: String): Seq[(String, Long)] =
-    plainRuns(fs, root).map(a => (a.path.getName, bytesOf(fs, a.path)))
+    baseToRead(fs, root) ++ runsToRead(fs, root).map(_.toString)
 
   // ------------------------------------------------------------- healing
 
@@ -209,33 +172,8 @@ private[graft] object SideStoreFold {
       } else if (!a.isComplete) { fs.delete(a.path, true); () }
     }
 
-  /** Adopt a legacy (pre-r17) single-tier artifact as the ladder's next
-    * run: a complete `_tier_next` supersedes `_tier` (the old promote's
-    * semantics), a partial one is discarded; a complete `_tier` becomes a
-    * run as-is. Runs AFTER [[healRuns]] so the adopted seq is final. */
-  private def adoptLegacy(fs: FileSystem, root: String): Unit = {
-    def adopt(p: Path): Unit = {
-      fs.mkdirs(runsRoot(root))
-      fs.rename(p, runPath(root, nextSeq(fs, root)))
-      ()
-    }
-    val tn = legacyTierNextPath(root)
-    val t = legacyTierPath(root)
-    if (fs.exists(tn)) {
-      if (complete(fs, tn)) {
-        adopt(tn)
-        if (fs.exists(t)) fs.delete(t, true)
-      } else fs.delete(tn, true)
-      ()
-    }
-    if (fs.exists(t)) {
-      if (complete(fs, t)) adopt(t) else { fs.delete(t, true); () }
-    }
-  }
-
   private def healAll(fs: FileSystem, root: String): Unit = {
     healRuns(fs, root)
-    adoptLegacy(fs, root)
     healBase(fs, root)
   }
 
@@ -287,12 +225,8 @@ private[graft] object SideStoreFold {
     if (deltas.isEmpty) return
     val seq = nextSeq(fs, root)
     val dst = runPath(root, seq)
-    val (_, sec) = timed {
-      foldInto(spark, deltas.map(_.toString), dst, key)
-    }
+    foldInto(spark, deltas.map(_.toString), dst, key)
     deltas.foreach(p => fs.delete(p, true))
-    note(spark, root, f"minor $sec%.1fs ${dst.getName} " +
-      f"${bytesOf(fs, dst) / 1e6}%.1fMB")
     mergeDue(spark, fs, root, key)
   }
 
@@ -328,7 +262,6 @@ private[graft] object SideStoreFold {
     // the major's dedup(base ∪ runs) subsumes all merge work — skip the
     // cascade in the firing where the major is already due (ADVICE r17)
     if (majorDue(spark, fs, root, runs.map(_._2).toSeq)) {
-      if (runs.size >= 2) note(spark, root, "cascade skipped (major due)")
       // Contract tripwire (ADVICE r18 #3): a valve that calls minorFold
       // without the contractual majorFoldIfDue follow-up accumulates one
       // unmerged run per firing forever (on a base-less store majorDue is
@@ -348,10 +281,8 @@ private[graft] object SideStoreFold {
       val (prev, prevBytes) = runs(runs.size - 2)
       if (newestBytes >= ratio * prevBytes) {
         val dst = mergePath(root, prev.lo, newest.hi)
-        val (_, sec) = timed {
-          foldInto(spark,
-            Seq(prev.path.toString, newest.path.toString), dst, key)
-        }
+        foldInto(spark,
+          Seq(prev.path.toString, newest.path.toString), dst, key)
         promoteMerge(fs, root,
           RunArt(dst, prev.lo, newest.hi, isMerge = true, isComplete = true))
         val merged = RunArt(runPath(root, prev.lo), prev.lo, newest.hi,
@@ -359,8 +290,6 @@ private[graft] object SideStoreFold {
         val mergedBytes = bytesOf(fs, merged.path)
         runs.remove(runs.size - 2, 2)
         runs += ((merged, mergedBytes))
-        note(spark, root, f"merge $sec%.1fs r${prev.lo}%05d..r${newest.hi}%05d " +
-          f"${mergedBytes / 1e6}%.1fMB")
       } else more = false
     }
   }
@@ -382,18 +311,14 @@ private[graft] object SideStoreFold {
     if (runBytes < ratio * baseBytes) return
     val srcs = runs.map(_.path.toString) ++
       (if (fs.exists(base)) Seq(base.toString) else Seq.empty)
-    val (_, sec) = timed {
-      foldInto(spark, srcs, baseNextPath(root), key)
-    }
+    foldInto(spark, srcs, baseNextPath(root), key)
     runs.foreach(a => fs.delete(a.path, true))
     dropRunsRootIfEmpty(fs, root)
     healBase(fs, root) // promotes the complete _base_next
-    note(spark, root, f"major $sec%.1fs runs=${runs.size} " +
-      f"${bytesOf(fs, basePath(root)) / 1e6}%.1fMB base")
   }
 
   /** FULL fold — the explicit `compact()` contract the specs pin:
-    * everything (`deltas ∪ ladder ∪ legacy tier ∪ base`) → one `_base`,
+    * everything (`deltas ∪ ladder ∪ base`) → one `_base`,
     * nothing else left at `root` but the deltas the caller didn't pass. */
   def fullFold(spark: SparkSession, fs: FileSystem, root: String,
       deltas: Seq[Path], key: String): Unit = {
@@ -401,7 +326,7 @@ private[graft] object SideStoreFold {
     val runs = plainRuns(fs, root)
     if (deltas.isEmpty && runs.isEmpty) return
     val srcs = deltas.map(_.toString) ++ runs.map(_.path.toString) ++
-      levelToRead(fs, basePath(root), baseNextPath(root))
+      baseToRead(fs, root)
     foldInto(spark, srcs, baseNextPath(root), key)
     deltas.foreach(p => fs.delete(p, true))
     runs.foreach(a => fs.delete(a.path, true))

@@ -79,22 +79,21 @@ object TextOps {
     * S-curve midpoint is ≈ (1/bands)^(bands/numHashes). */
   private[graft] val NumHashesConf = "spark.graft.text.lsh.numHashes"
   private[graft] val BandsConf = "spark.graft.text.lsh.bands"
-  private[graft] val JaccardThresholdConf = "spark.graft.text.lsh.jaccardThreshold"
 
   private[graft] final case class LshParams(
-      numHashes: Int, bands: Int, threshold: Double) {
+      numHashes: Int, bands: Int) {
     require(numHashes >= 1 && numHashes <= 1024,
       s"numHashes must be in [1, 1024] (graft_minhash bound), got $numHashes")
     require(bands >= 1 && numHashes % bands == 0,
       s"bands must divide numHashes, got $numHashes hashes / $bands bands")
     def rowsPerBand: Int = numHashes / bands
+    def threshold: Double = JaccardThreshold
   }
 
   private[graft] def lshParams(
       spark: org.apache.spark.sql.SparkSession): LshParams = LshParams(
     spark.conf.get(NumHashesConf, NumHashes.toString).toInt,
-    spark.conf.get(BandsConf, Bands.toString).toInt,
-    spark.conf.get(JaccardThresholdConf, JaccardThreshold.toString).toDouble)
+    spark.conf.get(BandsConf, Bands.toString).toInt)
 
   private val stopWords = Seq("the", "a", "of", "and", "to", "in", "is")
 
@@ -259,9 +258,9 @@ object TextOps {
     lshPairsOf(docs(s, d))
 
   /** Frame-parametric [[lshPairs]] — the same verified pipeline over any
-    * `(doc_id, text)` frame, so the release-magnitude probe
-    * ([[graft.ProbeTextDedup]]) and the collapsed edge generator
-    * ([[dedupEdgesOf]]) drive the exact operator the gates pin.
+    * `(doc_id, text)` frame, so the collapsed edge generator
+    * ([[dedupEdgesOf]]) drives the exact operator the gates pin (the
+    * release-magnitude records of this chain are PROBES.md r14/r15).
     *
     * The verification join PRUNES the fat shingle table to candidate ids
     * first (r14, found by the magnitude probe): `sh` rows are ~4 KB
@@ -369,7 +368,8 @@ object TextOps {
   }
 
   /** Verified near-dup EDGES for the COMPONENT consumers (q63's
-    * clustering, q72's corpus materialization, [[graft.ProbeTextDedup]]):
+    * clustering, q72's corpus materialization; magnitude records in
+    * PROBES.md r14):
     * byte-identical documents collapse to one representative BEFORE the
     * LSH, then representative-level verified pairs union with the exact
     * groups' star edges.
@@ -626,37 +626,13 @@ object TextOps {
     * r14). */
   private[graft] val CcBroadcastBytesPerIdRow = 32L
 
-  /** r13's row-cap conf, superseded by [[CcBroadcastMaxBytesConf]] in r14.
-    * Still honored as a fallback when the byte conf is unset — a
-    * deployment pinning the old key must not silently revert to defaults
-    * (ADVICE r14); setting it logs a one-time deprecation pointer. */
-  private[graft] val LegacyCcBroadcastMaxRowsConf =
-    "spark.graft.cc.broadcastNodesMaxRows"
-  @volatile private var warnedLegacyRowCap = false
-
   /** Row cap implied by [[CcBroadcastMaxBytesConf]] (0 disables) at the
-    * given estimated relation cost per row. The legacy ROW-cap conf, when
-    * set and the byte conf is not, applies directly (it already is a row
-    * count — per-row pricing does not rescale it). */
+    * given estimated relation cost per row. */
   private[graft] def ccBroadcastRowCap(
       spark: org.apache.spark.sql.SparkSession,
-      bytesPerRow: Long = CcBroadcastBytesPerRow): Long = {
-    val explicit = spark.conf.getOption(CcBroadcastMaxBytesConf)
-    val legacy = spark.conf.getOption(LegacyCcBroadcastMaxRowsConf)
-    if (legacy.isDefined && !warnedLegacyRowCap) {
-      warnedLegacyRowCap = true
-      System.err.println(s"[graft] $LegacyCcBroadcastMaxRowsConf is " +
-        s"deprecated — set $CcBroadcastMaxBytesConf (estimated relation " +
-        "bytes; 0 disables the forced hint) instead" +
-        (if (explicit.isDefined) s"; both are set, $CcBroadcastMaxBytesConf wins"
-         else ""))
-    }
-    (explicit, legacy) match {
-      case (Some(b), _) => b.toLong / bytesPerRow
-      case (None, Some(rows)) => rows.toLong
-      case (None, None) => DefaultCcBroadcastMaxBytes / bytesPerRow
-    }
-  }
+      bytesPerRow: Long = CcBroadcastBytesPerRow): Long =
+    spark.conf.get(CcBroadcastMaxBytesConf,
+      DefaultCcBroadcastMaxBytes.toString).toLong / bytesPerRow
 
   /** Anti-join an id set out of a FAT corpus without shuffling the corpus:
     * Catalyst only broadcasts under its 10 MB plan-stats threshold, so a

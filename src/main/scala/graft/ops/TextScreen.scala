@@ -38,10 +38,8 @@ object TextSigStore {
     *     partial attempt rewrites identical bytes);
     *   - `sigs/_base` (+ `_base_next` mid-promotion) and the
     *     `sigs/_runs/rNNNNN` size-tiered ladder — the compaction levels
-    *     ([[SideStoreFold]]'s minor/merge/major schedule; legacy
-    *     `_tier`/`_tier_next` artifacts stay readable and are adopted
-    *     into the ladder; [[compact]] is the explicit
-    *     fold-everything-to-`_base` lever);
+    *     ([[SideStoreFold]]'s minor/merge/major schedule; [[compact]]
+    *     is the explicit fold-everything-to-`_base` lever);
     *   - `tip` — the lexicographic update-id high-watermark (atomic
     *     write-temp + overwrite-rename, the codes store's discipline);
     *   - `meta` — the banding fingerprint (`numHashes`, `bands`) the
@@ -382,13 +380,11 @@ object TextSigStore {
     * rewriting its whole history every `compactAt` batches (the r15
     * 8-batch probe's 88-92 s fold spikes were exactly that base rewrite),
     * and no minor fold ever approaches the base rewrite it replaced (the
-    * r16 single-`_tier` design's pre-major tail). What each valve firing
-    * did is readable at [[SideStoreFold.FoldNoteConf]]. */
+    * r16 single-`_tier` design's pre-major tail). */
   def maybeCompact(spark: SparkSession, dir: String): Unit = {
     val at = spark.conf
       .get(CompactSigsAtConf, DefaultCompactSigsAt.toString).toInt
     if (committedDeltaDirs(spark, dir).size >= at) {
-      SideStoreFold.resetFoldNote(spark)
       foreachSide(spark, dir) { (fs, root, deltas) =>
         SideStoreFold.minorFold(spark, fs, root, deltas, "doc_id")
         SideStoreFold.majorFoldIfDue(spark, fs, root, "doc_id")
@@ -440,6 +436,23 @@ object TextScreen {
       batch: DataFrame): DataFrame =
     screenImpl(corpus, corpusSigs, batch)._1
 
+  /** Post-run regime note (the annJoin `spark.graft.annjoin.last.*`
+    * discipline): which physical shape the byte-gated MinHash band join
+    * took — `broadcast` (batch bands map-side against the streaming
+    * corpus table) or `shuffle` (the cluster regime past the cap).
+    * Written per screen so specs read the decision the run actually made
+    * instead of re-deriving the arithmetic. */
+  val LastBandJoinNote = "spark.graft.screen.last.bandJoin"
+
+  /** Broadcast the batch's band rows while their driver-known count fits
+    * the CC byte gate; `note`, when given, records the decision. */
+  private def gated(spark: org.apache.spark.sql.SparkSession,
+      bands: DataFrame, note: Option[String] = None): DataFrame = {
+    val fits = bands.count() <= TextOps.ccBroadcastRowCap(spark)
+    note.foreach(spark.conf.set(_, if (fits) "broadcast" else "shuffle"))
+    if (fits) broadcast(bands) else bands
+  }
+
   /** The simhash TIER's verified pairs (r16): batch simhashes banded
     * against the store's `simsigs/` side and against themselves, the
     * one-long hamming verify running INSIDE the bucket join (the
@@ -450,22 +463,6 @@ object TextScreen {
     * the MinHash candidate set before its (text-touching) jaccard
     * verification. Same broadcast byte gate and same shape as the
     * MinHash band join. */
-  /** Post-run regime notes (the annJoin `spark.graft.annjoin.last.*`
-    * discipline): which physical shape the byte-gated band joins took —
-    * `broadcast` (batch bands map-side against the streaming corpus
-    * table) or `shuffle` (the cluster regime past the cap). Written per
-    * screen so probes and specs read the decision the run actually
-    * made instead of re-deriving the arithmetic. */
-  val LastBandJoinNote = "spark.graft.screen.last.bandJoin"
-  val LastSimBandJoinNote = "spark.graft.screen.last.simBandJoin"
-
-  private def gated(spark: org.apache.spark.sql.SparkSession,
-      bands: DataFrame, note: String): DataFrame = {
-    val fits = bands.count() <= TextOps.ccBroadcastRowCap(spark)
-    spark.conf.set(note, if (fits) "broadcast" else "shuffle")
-    if (fits) broadcast(bands) else bands
-  }
-
   private def simTierPairs(corpusSims: DataFrame, batchSims: DataFrame,
       bits: Int): DataFrame = {
     val spark = batchSims.sparkSession
@@ -479,7 +476,7 @@ object TextScreen {
     val batchBands = TextOps.simhashBandRowsOf(batchSims, bits)
       .localCheckpoint(false)
     val corpusBands = TextOps.simhashBandRowsOf(corpusSims, bits)
-    val bSide = gated(spark, batchBands, LastSimBandJoinNote)
+    val bSide = gated(spark, batchBands)
     val hamNO = graft.functions.TextFunctions
       .hammingDistance(col("c.sh"), col("b.sh"))
     val newOld = corpusBands.as("c")
@@ -523,7 +520,7 @@ object TextScreen {
     // bounded-batch contract: band rows are |batch|·bands skinny rows
     // with a driver-known count, so the broadcast decision is exact
     // (same byte gate as the CC node map — ~(long, long-ish-string) rows)
-    val bSide = gated(spark, batchBands, LastBandJoinNote)
+    val bSide = gated(spark, batchBands, Some(LastBandJoinNote))
     val newOld = corpusBands.as("c")
       .join(bSide.as("b"),
         col("c.band") === col("b.band") && col("c.bsig") === col("b.bsig"))

@@ -15,8 +15,8 @@ import graft.ops.SideStoreFold
   * reader's root count stay O(log). These rows pin the mechanics the
   * text/vector store specs exercise only through their valves: fold-level
   * read equivalence across every ladder state, the cascade's dynamics,
-  * the merge artifact's crash windows, legacy `_tier` adoption, and the
-  * natural default-ratio major crossing. */
+  * the merge artifact's crash windows, and the natural default-ratio
+  * major crossing. */
 class SideStoreFoldSpec extends SparkSpec {
   import spark.implicits._
 
@@ -178,35 +178,5 @@ class SideStoreFoldSpec extends SparkSpec {
         "heal must discard, never promote, a partial merge artifact")
       assert(content(root) === rows(0, 200).as[(Long, String)].collect().toSet)
     } finally spark.conf.unset(SideStoreFold.RunMergeRatioConf)
-  }
-
-  test("legacy pre-ladder artifacts: _tier stays readable and is adopted " +
-      "as a run; a complete _tier_next supersedes it; a partial _tier_next " +
-      "is discarded") {
-    val root = tempRoot("legacy")
-    val fs = fsOf(root)
-    SideStoreFold.fullFold(spark, fs, root,
-      Seq(writeDelta(root, "u0001", 0, 100)), "id")
-    // a pre-r17 store's single tier: readable in place...
-    rows(100, 150).write.parquet(s"$root/_tier")
-    assert(content(root) === rows(0, 150).as[(Long, String)].collect().toSet)
-    // ...and a complete _tier_next (the old minor fold's un-promoted
-    // output, a superset of _tier) is PREFERRED over it, old-rule style
-    rows(100, 200).write.parquet(s"$root/_tier_next")
-    assert(readRows(root) === 200L,
-      "a complete _tier_next must shadow _tier, not double-read it")
-    // heal adopts the winner into the ladder and drops the superseded tier
-    SideStoreFold.minorFold(spark, fs, root, Seq.empty, "id")
-    assert(runNames(root) === Seq("r00001"))
-    assert(!fs.exists(new Path(s"$root/_tier")) &&
-      !fs.exists(new Path(s"$root/_tier_next")))
-    assert(content(root) === rows(0, 200).as[(Long, String)].collect().toSet)
-    // a PARTIAL _tier_next is invisible and discarded (old rule kept)
-    rows(999000, 999100).write.parquet(s"$root/_tier_next")
-    fs.delete(new Path(s"$root/_tier_next/_SUCCESS"), false)
-    assert(content(root) === rows(0, 200).as[(Long, String)].collect().toSet)
-    SideStoreFold.minorFold(spark, fs, root, Seq.empty, "id")
-    assert(!fs.exists(new Path(s"$root/_tier_next")))
-    assert(content(root) === rows(0, 200).as[(Long, String)].collect().toSet)
   }
 }

@@ -655,66 +655,13 @@ class TextScreenSpec extends SparkSpec {
     assert(!sigIds.exists(batch.select("doc_id").as[Long].collect().toSet))
   }
 
-  test("legacy _tier_next crash windows: a COMPLETE unpromoted tier is " +
-      "preferred and adopted into the ladder; a PARTIAL one is invisible " +
-      "and discarded") {
-    // the _base_next rules (IngestSpec) applied to the single-tier level
-    // the r16 minor fold introduced — now LEGACY artifacts (r17's ladder
-    // replaced the single `_tier`): a pre-r17 fold that crashed after
-    // writing its `_SUCCESS`-complete `_tier_next` (but before source
-    // deletion / promotion) must stay readable — it is a superset of what
-    // it folded — and be ADOPTED as a ladder run by the next fold's heal;
-    // one that died mid-write must be invisible and discarded, never
-    // promoted over rows the level still holds
-    val all = corpusOf(200).localCheckpoint()
-    val (corpus, batch) = splitOf(all)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tiernext").toString + "/store"
-    TextSigStore.build(spark, dir, corpus)
-    TextScreen.screenAndAppend(spark, dir, corpus, batch, "u0001")
-    def content(): Set[(Long, String)] = TextSigStore.sigs(spark, dir)
-      .select(col("doc_id"), concat_ws(",", col("sig")).as("s"))
-      .as[(Long, String)].collect().toSet
-    val c0 = content()
-    // COMPLETE _tier_next (the minor fold's output; crash before
-    // delete-sources/promote): readers prefer it, rows only duplicate
-    spark.read.parquet(s"$dir/sigs/u0001")
-      .write.parquet(s"$dir/sigs/_tier_next")
-    assert(new java.io.File(s"$dir/sigs/_tier_next/_SUCCESS").exists())
-    assert(content() === c0)
-    TextSigStore.compact(spark, dir) // heals (promotes), then folds all
-    assert(content() === c0)
-    assert(new java.io.File(s"$dir/sigs").listFiles().map(_.getName).toSet
-      === Set("_base"))
-    // PARTIAL _tier_next carrying rows that would CHANGE content if a
-    // reader (or a promotion) ever saw them: must stay invisible and be
-    // discarded by the next fold's heal
-    Seq((999999L, Seq(1L, 2L, 3L))).toDF("doc_id", "sig")
-      .write.parquet(s"$dir/sigs/_tier_next")
-    new java.io.File(s"$dir/sigs/_tier_next/_SUCCESS").delete()
-    assert(content() === c0, "a partial _tier_next must be invisible")
-    TextSigStore.compact(spark, dir)
-    assert(content() === c0, "heal must discard, never promote, a partial tier")
-    assert(!content().exists(_._1 == 999999L))
-  }
-
-  test("legacy CC broadcast row-cap conf still honored when the byte conf is unset") {
+  test("CC broadcast row cap is the byte conf (or its default) over the row price") {
     assert(TextOps.ccBroadcastRowCap(spark) ===
       TextOps.DefaultCcBroadcastMaxBytes / TextOps.CcBroadcastBytesPerRow)
     assert(TextOps.ccBroadcastRowCap(spark, TextOps.CcBroadcastBytesPerIdRow) ===
       TextOps.DefaultCcBroadcastMaxBytes / TextOps.CcBroadcastBytesPerIdRow)
-    spark.conf.set(TextOps.LegacyCcBroadcastMaxRowsConf, "12345")
-    try {
-      // the legacy value is already a ROW count: applied at any per-row price
-      assert(TextOps.ccBroadcastRowCap(spark) === 12345L)
-      assert(TextOps.ccBroadcastRowCap(spark,
-        TextOps.CcBroadcastBytesPerIdRow) === 12345L)
-      // the byte conf, when set, wins over the legacy key
-      spark.conf.set(TextOps.CcBroadcastMaxBytesConf, "6400")
-      assert(TextOps.ccBroadcastRowCap(spark) === 100L)
-    } finally {
-      spark.conf.unset(TextOps.LegacyCcBroadcastMaxRowsConf)
-      spark.conf.unset(TextOps.CcBroadcastMaxBytesConf)
-    }
+    spark.conf.set(TextOps.CcBroadcastMaxBytesConf, "6400")
+    try assert(TextOps.ccBroadcastRowCap(spark) === 100L)
+    finally spark.conf.unset(TextOps.CcBroadcastMaxBytesConf)
   }
 }
